@@ -131,6 +131,28 @@ def _np_pooled(tag: str, n: int, dtype="float64"):
 _PRUNE_MARGIN = 2e-6
 
 
+def _topk_keep(cs, k: int, where: str):
+    """Mask of the rows of ``cs`` (batch rows x queries) within
+    ``_PRUNE_MARGIN`` of each query's k-th largest cosine in the batch,
+    or None when the batch has no more than k rows (nothing to prune).
+
+    A NaN cosine (a zero-norm or non-finite vector) raises: it would
+    make that query's threshold NaN, every comparison false, and its
+    top-k silently empty."""
+    import numpy as np
+
+    if np.isnan(cs).any():
+        raise ValueError(
+            f"{where}: NaN cosine — a zero-norm or non-finite embedding "
+            "violates the data contract"
+        )
+    nb = cs.shape[0]
+    if nb <= k:
+        return None
+    th = np.partition(cs, nb - k, axis=0)[nb - k]
+    return cs >= th - _PRUNE_MARGIN
+
+
 def pair_cosine_arrow(
     corpus: DataFrame,
     q_ids: list,
@@ -245,14 +267,14 @@ def pair_cosine_arrow(
             # silently read overwritten data. The copies are output-sized
             # (nb*m*8 B) — negligible vs the kernel math; pooled buffers
             # remain for the INTERMEDIATE math only (buf/den).
-            if per_task_topk is not None and nb > per_task_topk:
+            keep = None
+            if per_task_topk is not None:
                 # per-batch per-query top-k prune (see docstring): keep
                 # rows within _PRUNE_MARGIN of the K-th largest cosine.
                 # Fancy indexing copies, so nothing aliases the pool.
-                th = np.partition(
-                    cs_all, nb - per_task_topk, axis=0
-                )[nb - per_task_topk]
-                keep = (cs_all >= th - _PRUNE_MARGIN).ravel()
+                keep = _topk_keep(cs_all, per_task_topk, "pair_cosine_arrow")
+            if keep is not None:
+                keep = keep.ravel()
                 yield pa.record_batch(
                     {
                         qid_name: pa.array(out_qid[: nb * m][keep]),
@@ -385,18 +407,20 @@ def pair_cosine_prefix_arrow(
                 )
             # copies, not pooled-buffer views — see pair_cosine_arrow's
             # yield-time note (ADVICE r13 medium)
-            if per_task_topk is not None and nb > per_task_topk:
+            masks = [None]
+            if per_task_topk is not None:
                 # union-of-rungs per-batch top-k prune (see docstring);
                 # fancy indexing copies, nothing aliases the pool
-                keepm = None
-                for col in [outs[k] for k in dims_l] + [out_full]:
-                    csk = col[: nb * m].reshape(nb, m)
-                    th = np.partition(
-                        csk, nb - per_task_topk, axis=0
-                    )[nb - per_task_topk]
-                    km = csk >= th - _PRUNE_MARGIN
-                    keepm = km if keepm is None else (keepm | km)
-                keep = keepm.ravel()
+                masks = [
+                    _topk_keep(
+                        col[: nb * m].reshape(nb, m),
+                        per_task_topk,
+                        "pair_cosine_prefix_arrow",
+                    )
+                    for col in [outs[k] for k in dims_l] + [out_full]
+                ]
+            if masks[0] is not None:
+                keep = np.logical_or.reduce(masks).ravel()
                 data = {
                     "qid": pa.array(out_qid[: nb * m][keep]),
                     "nid": pa.array(out_nid[: nb * m][keep]),
@@ -862,6 +886,10 @@ def sim_label_centroids(spark, sf_dir):
     )
 
 
+#: sim_quantized_topk's k: the window filter keeps rank <= k and the
+#: kernel prunes each batch to k + 1 (the self pair is filtered after).
+_QUANT_TOPK = 5
+
 _QUANT_SQL = """
     WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS v,
@@ -969,10 +997,10 @@ def sim_quantized_topk(spark, sf_dir):
             out_qid = np.broadcast_to(qids[None, :], (nb, m)).ravel()
             out_nid = np.broadcast_to(nid[:, None], (nb, m)).ravel()
             flat = cs.ravel()
-            k1 = 6  # window top-5 + the self pair filtered downstream
-            if nb > k1:
-                th = np.partition(cs, nb - k1, axis=0)[nb - k1]
-                keep = (cs >= th - _PRUNE_MARGIN).ravel()
+            # the window's top-k plus the self pair filtered downstream
+            keep = _topk_keep(cs, _QUANT_TOPK + 1, "sim_quantized_topk")
+            if keep is not None:
+                keep = keep.ravel()
                 out_qid, out_nid, flat = (
                     out_qid[keep], out_nid[keep], flat[keep]
                 )
@@ -991,7 +1019,7 @@ def sim_quantized_topk(spark, sf_dir):
     return (
         pairs.filter(F.col("qid") != F.col("nid"))
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
+        .filter(F.col("rank") <= _QUANT_TOPK)
         .select("qid", "nid", "rank", F.round("cos_q", 6).alias("cos_sim_q"))
     )
 

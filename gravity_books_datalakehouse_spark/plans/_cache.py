@@ -58,11 +58,14 @@ def evict_other_scales(registry: dict, key: tuple[str, str]) -> None:
 
 def clear_session_caches() -> None:
     """Unpersist and forget every memoized intermediate (star tables,
-    shingles, candidate pairs, signed embeddings) across all sessions.
+    shingles, candidate pairs, signed embeddings, Parquet schemas)
+    across all sessions.
 
     For long-lived sessions that sweep many scale factors: each
     (applicationId, sf_dir) memo pins executor storage until cleared.
-    Safe to call between workloads — the next query simply rebuilds."""
+    Safe to call between workloads — the next query simply rebuilds.
+    tests/test_schema_memo.py finds every module-level ``_*_CACHE`` by
+    name and checks it is listed here."""
     from gravity_books_datalakehouse_spark.operators import (
         components,
         dedup,
@@ -70,7 +73,8 @@ def clear_session_caches() -> None:
         kmeans,
         similarity,
     )
-    from gravity_books_datalakehouse_spark.plans import star
+    from gravity_books_datalakehouse_spark.plans import advanced_queries, star
+    from gravity_books_datalakehouse_spark.sources import readers
     from gravity_books_datalakehouse_spark.streaming import event_queries
 
     for registry in (
@@ -83,6 +87,10 @@ def clear_session_caches() -> None:
         dedup._REP_PAIR_CACHE,
         dedup._DW_CACHE,
         dedup._SPAN_CACHE,
+        dedup._BIGRAM_CACHE,
+        dedup._BIGRAM_ID_CACHE,
+        advanced_queries._QNORM_CACHE,
+        readers._SCHEMA_CACHE,
         similarity._SIG_CACHE,
         similarity._IVF_ASSIGN_CACHE,
         kmeans._EMB_CACHE,

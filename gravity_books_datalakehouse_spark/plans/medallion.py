@@ -36,6 +36,7 @@ from gravity_books_datalakehouse_spark.sources.catalog import (
     TESTDATA_TABLES,
     load_table,
 )
+from gravity_books_datalakehouse_spark.sources.readers import read_parquet
 from gravity_books_datalakehouse_spark.sources.writers import overwrite_parquet
 
 BRONZE_TABLES = TESTDATA_TABLES
@@ -73,7 +74,7 @@ def run_bronze(spark: SparkSession, sf_dir: str, lake_dir: str) -> dict[str, str
 
 def run_silver(spark: SparkSession, lake_dir: str) -> dict[str, str]:
     """Cleaned/conformed tables from bronze (etl_lakehouse.py:47-74)."""
-    b = {t: spark.read.parquet(_path(lake_dir, "bronze", t)) for t in BRONZE_TABLES}
+    b = {t: read_parquet(spark, _path(lake_dir, "bronze", t)) for t in BRONZE_TABLES}
     out = {}
 
     # cleaned_customer — the J1..J4 enrichment chain (etl_lakehouse.py:54-58)
@@ -171,7 +172,7 @@ def run_medallion(spark: SparkSession, sf_dir: str, lake_dir: str) -> dict[str, 
 def register_gold_views(spark: SparkSession, lake_dir: str) -> None:
     """S6 — gold tables as SQL views (test_queries.py:91-95 analog)."""
     for name in ("dim_customer", "dim_part", "dim_priority", "dim_date", "fact_sales"):
-        spark.read.parquet(_path(lake_dir, "gold", name)).createOrReplaceTempView(name)
+        read_parquet(spark, _path(lake_dir, "gold", name)).createOrReplaceTempView(name)
 
 
 def append_fact_increment(

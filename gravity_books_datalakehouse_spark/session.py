@@ -42,6 +42,13 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE coalesce the final shuffle of a persisted plan too (off
+        # by default): without it the star's 300-row dims are cached at
+        # shuffle.partitions tasks each and every query over them pays
+        # that task count. Explicit repartition(n, col) caches (the
+        # fact's part_sk layout) are never coalesced, so their
+        # partitioning still satisfies downstream aggregates.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -10,6 +10,14 @@ and predicate pushdown reach the scan (verify with
 ``df.explain()`` → ``PushedFilters`` / ``ReadSchema``). At 100 TB each of
 these tables becomes a directory of many files (ideally partitioned, e.g.
 fact by date); the same one-liner scans it in parallel across executors.
+
+Every scan goes through ``readers.read_parquet``, whose schema memo is
+keyed by ``(applicationId, absolute local path)`` and checked against the
+file's version (inode, size, mtime; per file for a directory), so a
+repeated query over an unchanged table runs no footer-inference job,
+and a first read of a single file resolves its footer on the driver.
+The memo covers local paths only; on an object store the upgrade path
+is a table log (Delta) that records schema per commit.
 """
 
 from __future__ import annotations
@@ -17,6 +25,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+from gravity_books_datalakehouse_spark.sources.readers import read_parquet
 
 #: Tables the driver materializes at /root/testdata/sf*/ (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -36,8 +46,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy Parquet scan of one testdata table."""
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    """Lazy Parquet scan of one testdata table (schema memoized per file
+    version, see ``readers.read_parquet``)."""
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_tables(

@@ -7,7 +7,9 @@ open cost and lose row-group-sized reads. Compaction bin-packs data back
 into ~target-sized files, preserving partition directories.
 
 Spark-first: sizing is computed from the table's actual on-disk bytes;
-the rewrite is one job (scan → repartition(n) → overwrite). For
+the rewrite is one job (scan → repartition(n) → overwrite), and a table
+already at or under its target file count is left alone (Delta's
+OPTIMIZE rule: files at target size are never rewritten). For
 partitioned tables, pass partition_by so directory layout (and partition
 pruning) is preserved. At 100 TB run it per-partition on a schedule,
 compacting only partitions whose small-file count crosses a threshold.
@@ -18,6 +20,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from gravity_books_datalakehouse_spark.sources.readers import read_parquet
 
 
 def table_file_stats(path: str) -> tuple[int, int]:
@@ -39,7 +43,8 @@ def compact_parquet(
     partition_by: list[str] | None = None,
 ) -> tuple[int, int]:
     """Rewrite ``path`` into ceil(total/target) files; returns (files
-    before, files after).
+    before, files after). A table that already has no more files than
+    that is returned as ``(n, n)`` without being read or written.
 
     The compacted output is written to a sibling staging directory and
     then atomically swapped over the original — the source table is never
@@ -52,12 +57,14 @@ def compact_parquet(
 
     n_before, total = table_file_stats(path)
     n_files = max(1, -(-total // target_file_bytes))
+    if n_before <= n_files:
+        return n_before, n_before
     staging = path.rstrip("/") + ".compact-staging"
     old = path.rstrip("/") + ".compact-old"
     for d in (staging, old):
         if os.path.isdir(d):
             shutil.rmtree(d)  # leftover from a prior crash
-    writer = spark.read.parquet(path).repartition(n_files).write.mode(
+    writer = read_parquet(spark, path).repartition(n_files).write.mode(
         "errorifexists"
     )
     if partition_by:

@@ -35,6 +35,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gravity_books_datalakehouse_spark.sources.readers import (
+    read_parquet,
+    record_parquet_schema,
+)
+
 _LATEST = "_LATEST"
 
 
@@ -95,7 +100,9 @@ def write_snapshot(
     wedges future writes. The next version is derived from
     max(retained versions, pointer): an orphan ``v=N`` from a crashed
     writer (pointer never flipped) is skipped over instead of being
-    retried forever with ``errorifexists``."""
+    retried forever with ``errorifexists``. The written frame's schema is
+    recorded for the new ``v=N`` directory, so the next read of this
+    version (e.g. the next merge) plans without an inference job."""
     import shutil
 
     versions = list_versions(table_dir)
@@ -113,6 +120,7 @@ def write_snapshot(
         with open(os.path.join(staging, _TXN), "w") as fh:
             json.dump({"app_id": app_id, "txn_version": int(txn_version)}, fh)
     os.rename(staging, _version_dir(table_dir, version))
+    record_parquet_schema(df.sparkSession, _version_dir(table_dir, version), df.schema)
     tmp = os.path.join(table_dir, _LATEST + ".tmp")
     with open(tmp, "w") as fh:
         fh.write(str(version))
@@ -130,12 +138,13 @@ def read_snapshot(
     """Read one snapshot: the committed latest by default, or any retained
     ``version`` (time travel). ``merge_schema=True`` makes the scan union
     column sets when reading a snapshot written under an evolved schema
-    together with unchanged old files (Parquet ``mergeSchema``)."""
+    together with unchanged old files (Parquet ``mergeSchema``); plain
+    reads go through the schema memo of ``readers.read_parquet``."""
     v = latest_version(table_dir) if version is None else version
-    reader = spark.read
+    path = _version_dir(table_dir, v)
     if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    return reader.parquet(_version_dir(table_dir, v))
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    return read_parquet(spark, path)
 
 
 def merge_snapshot(
@@ -328,6 +337,9 @@ def merge_snapshot_occ(
             version = max(list_versions(table_dir) + [base]) + 1
             os.rename(staging, _version_dir(table_dir, version))
             staging = None
+            record_parquet_schema(
+                spark, _version_dir(table_dir, version), merged.schema
+            )
             tmp = os.path.join(table_dir, _LATEST + ".tmp")
             with open(tmp, "w") as fh:
                 fh.write(str(version))

@@ -26,6 +26,7 @@ from gravity_books_datalakehouse_spark.plans.operator_queries import (
     lit_rows_df,
     register,
 )
+from gravity_books_datalakehouse_spark.sources.readers import read_parquet
 
 
 def read_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -45,13 +46,15 @@ def read_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = f"{sf_dir}/events.parquet"
     flag = "spark.sql.legacy.parquet.nanosAsLong"
     try:
-        raw = spark.read.parquet(path)
+        raw = read_parquet(spark, path)
         _ = raw.schema["ts"].dataType  # force footer/schema resolution
         return raw
     except Exception:
         prior = spark.conf.get(flag, "false")
         spark.conf.set(flag, "true")
         try:
+            # a raw read: the legacy-flag schema is a session mode, not
+            # a property of the file, so it never enters the schema memo
             return spark.read.parquet(path)
         except Exception:
             # not the nanos case (missing/corrupt file): restore the flag

@@ -736,3 +736,14 @@ def test_matryoshka_generator_carries_only_scalars(spark):
     )
     plan = _executed_plan(ranked)
     assert "WindowGroupLimit" in plan
+
+
+def test_star_dims_cache_coalesced_below_default_parallelism(spark):
+    """AQE may coalesce the final shuffle of a persisted plan
+    (canChangeCachedPlanOutputPartitioning), so the small cached dims
+    are not kept at shuffle.partitions tasks each."""
+    tables = build_star(spark, SF_SMOKE)
+    width = spark.sparkContext.defaultParallelism
+    for name in ("dim_customer", "dim_part", "dim_priority"):
+        tables[name].count()  # materialize the cache
+        assert tables[name].rdd.getNumPartitions() < width, name

@@ -92,3 +92,60 @@ def test_prune_margin_is_rounding_safe():
         for eps in (2.0000001e-6, 2.1e-6, 3e-6, 1e-5):
             hi, lo = b + eps, b
             assert r6(hi) > r6(lo), (hi, lo, r6(hi), r6(lo))
+
+
+def _corpus_with_zero_vector(spark, zero_id: int):
+    """12 vectors of width 8; row ``zero_id`` is all zeros."""
+    import random
+
+    rng = random.Random(7)
+    rows = [
+        (i, [0.0] * 8 if i == zero_id else [rng.uniform(-1, 1) for _ in range(8)])
+        for i in range(12)
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def test_zero_norm_vector_raises_in_pruned_kernels(spark):
+    """A zero-norm embedding makes its cosines NaN; the prune would turn
+    that into an empty top-k, so both pruned kernels raise instead."""
+    import pytest
+
+    from gravity_books_datalakehouse_spark.operators.similarity import (
+        pair_cosine_prefix_arrow,
+    )
+
+    e = _corpus_with_zero_vector(spark, zero_id=11)
+    qids, qvecs = collect_query_vectors(
+        e.filter(F.col("vec_id") < 3), "vec_id", "embedding"
+    )
+    for kern in (
+        pair_cosine_arrow(e, qids, qvecs, per_task_topk=3),
+        pair_cosine_prefix_arrow(e, qids, qvecs, (4,), per_task_topk=3),
+    ):
+        with pytest.raises(Exception, match="NaN cosine"):
+            kern.collect()
+
+
+def test_zero_norm_vector_raises_in_quantized_topk(spark, tmp_path):
+    """Under ANSI the quantization scale's 127/0 already fails; without
+    ANSI it quantizes to a null (zero) vector, and the kernel raises."""
+    import pytest
+
+    from gravity_books_datalakehouse_spark.operators.similarity import (
+        sim_quantized_topk,
+    )
+
+    d = str(tmp_path / "zero_sf")
+    _corpus_with_zero_vector(spark, zero_id=11).coalesce(1).write.parquet(
+        f"{d}/embeddings.parquet"
+    )
+    ansi = "spark.sql.ansi.enabled"
+    prior = spark.conf.get(ansi)
+    try:
+        for mode, error in (("true", "DIVIDE_BY_ZERO"), ("false", "NaN cosine")):
+            spark.conf.set(ansi, mode)
+            with pytest.raises(Exception, match=error):
+                sim_quantized_topk(spark, d).collect()
+    finally:
+        spark.conf.set(ansi, prior)
